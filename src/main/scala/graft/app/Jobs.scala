@@ -1,8 +1,9 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Concurrent
 import graft.gold.Gold
 import graft.quality.Rules
 import graft.schema.Schemas
@@ -20,6 +21,12 @@ import graft.sources.Medallion
   * checkpoint metrics the reference also tracks (record counts, quality
   * score, duration) — scalar aggregates, never row data, so the jobs
   * run unchanged on a real cluster.
+  *
+  * Concurrency contract: work with no data dependency overlaps via
+  * [[Concurrent.inParallel]] — the silver topics, the gold tables after
+  * the gate, the curation funnel counts. Only outputs with no shared
+  * dir run concurrently, and run metadata has a single writer: each
+  * job collects its rows and appends them once from the calling thread.
   */
 object JobSession {
 
@@ -89,14 +96,13 @@ object SilverJob {
 
   /** Bronze→silver for one topic: JSONL scan → well-formed filter →
     * silver transform → quality score (processed/raw, the reference's
-    * gate metric `main_pipeline.py:173-179`) → partitioned write →
-    * run-metadata checkpoint. Below-threshold batches are still
-    * written (the reference warns and proceeds); the score lands in
-    * the checkpoint so trend tracking (V16) sees it. */
+    * gate metric `main_pipeline.py:173-179`) → partitioned write.
+    * Below-threshold batches are still written (the reference warns
+    * and proceeds); [[run]] lands the score in the run-metadata
+    * checkpoint so trend tracking (V16) sees it. */
   def runTopic(spark: SparkSession, cfg: TopicConfig, bronzeRoot: String,
-               silverRoot: String, metaDir: String,
+               silverRoot: String,
                qualityThreshold: Double = 0.8): TopicResult = {
-    val t0 = System.nanoTime()
     try {
       // Hadoop FS probe, not java.io.File — the roots may be any
       // supported scheme (hdfs://, s3a://), where a local-File
@@ -108,13 +114,21 @@ object SilverJob {
       if (!fs.exists(dir))
         return TopicResult(cfg.name, success = false, 0, 0, 0.0,
           Some(s"No bronze files found for ${cfg.name}"))
+      // the raw line count rides the scan as an observed metric, so
+      // the one pass that fills the silver cache also counts bronze
+      // (a separate bronze.count() would re-parse every JSON line)
+      val rawRows = Observation()
       val bronze = Medallion.readBronze(spark, cfg.schema, dir.toString)
+        .observe(rawRows, count(lit(1)).as("rows"))
       val silver = cfg.transform(Medallion.wellFormed(bronze)).cache()
       try {
-        // One pass over the cached silver result; raw count is a
-        // metadata-only parquet/JSON count on the scan.
-        val raw = bronze.count()
         val processed = silver.count()
+        // AQE replaces a stage with no output rows by an empty relation,
+        // dropping its observed metric: then count the scan itself
+        val raw = rawRows.get.get("rows") match {
+          case Some(n: Long) => n
+          case _ => bronze.count()
+        }
         if (processed == 0L)
           return TopicResult(cfg.name, success = false, raw, 0, 0.0,
             Some(s"No valid records after processing ${cfg.name}"))
@@ -126,9 +140,6 @@ object SilverJob {
         // job must replace the dates it rebuilds, never double them
         Medallion.overwritePartitions(
           silver, s"$silverRoot/${cfg.silverTable}")
-        Medallion.writeRunMetadata(spark, metaDir,
-          s"silver:${cfg.name}", raw, processed,
-          (System.nanoTime() - t0) / 1e9)
         TopicResult(cfg.name, success = true, raw, processed, score, None)
       } finally silver.unpersist()
     } catch {
@@ -138,15 +149,28 @@ object SilverJob {
     }
   }
 
+  /** All topics concurrently (each writes only its own silver table),
+    * results in topic order; then one run-metadata append holding a
+    * row per successful topic, from this thread — concurrent appends
+    * to one parquet dir would share its `_temporary` staging dir. */
   def run(spark: SparkSession, bronzeRoot: String, silverRoot: String,
-          metaDir: String): Seq[TopicResult] =
-    topics.map { cfg =>
-      val r = runTopic(spark, cfg, bronzeRoot, silverRoot, metaDir)
+          metaDir: String): Seq[TopicResult] = {
+    val timed = Concurrent.inParallel(spark, topics.map { cfg => () =>
+      val t0 = System.nanoTime()
+      runTopic(spark, cfg, bronzeRoot, silverRoot) ->
+        (System.nanoTime() - t0) / 1e9
+    })
+    timed.foreach { case (r, _) =>
       System.err.println(s"[silver-job] ${r.topic}: success=${r.success} " +
         s"read=${r.recordsRead} processed=${r.recordsProcessed} " +
         f"quality=${r.qualityScore}%.3f${r.error.fold("")(" err=" + _)}")
-      r
     }
+    Medallion.writeRunMetadata(spark, metaDir, timed.collect {
+      case (r, sec) if r.success =>
+        (s"silver:${r.topic}", r.recordsRead, r.recordsProcessed, sec)
+    })
+    timed.map(_._1)
+  }
 
   /** CLI: `SilverJob <bronzeRoot> <silverRoot> <metaDir>`. */
   def main(args: Array[String]): Unit = {
@@ -165,21 +189,30 @@ object GoldJob {
   /** The four reference gold tables (`gold_pipeline.py:376-390`) plus
     * the J5 star-schema enrichment, keyed by table name. */
   def tables(clicks: DataFrame, users: Option[DataFrame],
-             products: Option[DataFrame]): Seq[(String, DataFrame)] = {
-    val core = Seq(
-      "user_summary" -> Gold.userSummary(clicks),
-      "product_summary" -> Gold.productSummary(clicks),
-      "daily_stats" -> Gold.dailyStats(clicks),
-      "engagement_metrics" -> Gold.engagementMetrics(clicks))
+             products: Option[DataFrame]): Seq[(String, DataFrame)] =
+    builders(clicks, users, products).map { case (n, f) => n -> f() }
+
+  /** [[tables]] unbuilt: each frame is built (Catalyst-analyzed) only
+    * when its thunk runs, so [[run]] can analyze them concurrently. */
+  private def builders(clicks: DataFrame, users: Option[DataFrame],
+                       products: Option[DataFrame])
+      : Seq[(String, () => DataFrame)] = {
+    val core = Seq[(String, () => DataFrame)](
+      "user_summary" -> (() => Gold.userSummary(clicks)),
+      "product_summary" -> (() => Gold.productSummary(clicks)),
+      "daily_stats" -> (() => Gold.dailyStats(clicks)),
+      "engagement_metrics" -> (() => Gold.engagementMetrics(clicks)))
     val enriched = for (u <- users; p <- products)
-      yield "enriched_events" -> Gold.enriched(clicks, u, p)
+      yield "enriched_events" -> (() => Gold.enriched(clicks, u, p))
     core ++ enriched
   }
 
   /** Silver→gold: read the silver tables, run the V12-style event rule
     * gate on clickstream (validity-rate threshold, `Rules.gate` /
     * `config.py:20`), then write each gold table under a run-date
-    * partition (`gold_pipeline.py:341-350`) + one run-metadata row. */
+    * partition (`gold_pipeline.py:341-350`) + one run-metadata row.
+    * The gate runs first and alone; the tables (each its own dir) are
+    * then built and written concurrently. */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
           metaDir: String, gateThreshold: Double = 0.8): Map[String, Boolean] = {
     val t0 = System.nanoTime()
@@ -196,6 +229,8 @@ object GoldJob {
     }
     val clicks = clicksOpt.get.cache()
     try {
+      val todo = builders(clicks, readIf("user_events_silver"),
+        readIf("product_events_silver"))
       // Quality gate (V15) over the silver batch before building gold.
       val stats = Rules.batchStats(clicks, goldGateRules)
       if (!Rules.gate(stats, gateThreshold)) {
@@ -204,18 +239,18 @@ object GoldJob {
         // Same table list as the success path, so the result-map key
         // set is identical whether the gate passes or fails (r2
         // ADVICE item: the old form dropped enriched_events here).
-        return tables(clicks, readIf("user_events_silver"),
-          readIf("product_events_silver")).map(_._1 -> false).toMap
+        return todo.map(_._1 -> false).toMap
       }
-      val results = tables(clicks, readIf("user_events_silver"),
-        readIf("product_events_silver")).map { case (name, df) =>
-        val out = df.withColumn("date", current_date())
-        // replace today's partition on re-run, never append-double it
-        Medallion.overwritePartitions(out, s"$goldRoot/$name")
-        name -> true
-      }.toMap
-      Medallion.writeRunMetadata(spark, metaDir, "gold",
-        clicks.count(), clicks.count(), (System.nanoTime() - t0) / 1e9)
+      val results = Concurrent.inParallel(spark, todo.map {
+        case (name, build) => () =>
+          // replace today's partition on re-run, never append-double it
+          Medallion.overwritePartitions(
+            build().withColumn("date", current_date()), s"$goldRoot/$name")
+          name -> true
+      }).toMap
+      val n = clicks.count()
+      Medallion.writeRunMetadata(spark, metaDir, "gold", n, n,
+        (System.nanoTime() - t0) / 1e9)
       results
     } finally clicks.unpersist()
   }
@@ -409,15 +444,15 @@ object CurationJob {
     val chunked = Curation.chunks(bounded)
     val kept = Curation.dedupChunks(chunked)
     kept.write.mode("overwrite").parquet(s"$outDir/chunks")
-    val m = CurationMetrics(
-      docsIn = docs.count(),
-      afterDedup = deduped.count(),
-      afterGate = gated.count(),
-      afterQuality = scored.count(),
-      afterMixture = mixed.count(),
-      afterBound = bounded.count(),
-      chunksOut = chunked.count(),
-      chunksKept = spark.read.parquet(s"$outDir/chunks").count())
+    // read-only over persisted frames and a written dir: overlap them
+    val Seq(docsIn, afterDedup, afterGate, afterQuality, afterMixture,
+        afterBound, chunksOut, chunksKept) = Concurrent.inParallel(spark, Seq(
+      () => docs.count(), () => deduped.count(), () => gated.count(),
+      () => scored.count(), () => mixed.count(), () => bounded.count(),
+      () => chunked.count(),
+      () => spark.read.parquet(s"$outDir/chunks").count()))
+    val m = CurationMetrics(docsIn, afterDedup, afterGate, afterQuality,
+      afterMixture, afterBound, chunksOut, chunksKept)
     import spark.implicits._
     Seq(m).toDS().write.mode("overwrite").parquet(s"$outDir/metrics")
     Seq(deduped, gated, scored, mixed, bounded).foreach(_.unpersist())

@@ -53,8 +53,9 @@ object Vectors {
 
   /** Exact int64 dot product Σ aᵢ·bᵢ of two long arrays — native
     * codegen ([[org.apache.spark.sql.graft.DotLong]]); identical
-    * values to the HOF fold (integer arithmetic, exact; ragged →
-    * null), compiled to a primitive loop. */
+    * values to the HOF fold on null-free arrays (integer arithmetic,
+    * exact; ragged → null; a null element counts as 0 where the fold
+    * returns null), compiled to a primitive loop. */
   def dotL(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.DotLong(a, b)
 

@@ -2700,6 +2700,17 @@ object PipelineQueries {
           .as("inflation_ppm"))
   }
 
+  /** q205's corpus totals `(nr, nt)` = column sums of the bucket
+    * census `(cr, ct)`: an exact integer re-sum of disjoint bucket
+    * counts, so the same nr/nt as counting the occurrence frame a
+    * second time (round-12 phase 3: one fewer corpus-sized pass). An
+    * empty census yields 0, not NULL — the occurrence count's
+    * empty-input value. */
+  private[graft] def dsirTotals(census: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    census.agg(coalesce(sum(col("cr")), lit(0L)).as("nr"),
+      coalesce(sum(col("ct")), lit(0L)).as("nt"))
+
   /** q205 — DSIR-style hashed-n-gram importance weights (Xie et al.
     * 2023, "Data Selection for Language Models via Importance
     * Resampling"): score every document by how target-like its hashed
@@ -2787,11 +2798,7 @@ object PipelineQueries {
       // ≤128 rows, reused by the totals re-sum below — persist so the
       // totals don't replay the occurrence aggregation
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // totals = column sums of the bucket census (exact integer re-sum
-    // of disjoint bucket counts — same nr/nt by definition); the old
-    // shape aggregated the full occurrence frame a second time
-    // (round-12 phase 3: one fewer corpus-sized pass)
-    val tot = bc.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
+    val tot = dsirTotals(bc)
     val ratio = bc.crossJoin(broadcast(tot))
       .select(col("b"),
         ((mnat(col("ct") + 1) - mnat(col("nt") + 128))

@@ -83,21 +83,15 @@ object Medallion {
     * leaving every other `date=` directory untouched — the
     * reprocess-one-day upsert a medallion pipeline needs (a plain
     * `overwrite` would truncate the whole table; `append` would
-    * double-count the re-run day). Session conf is restored after. */
-  def overwritePartitions(df: DataFrame, tableDir: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite")
+    * double-count the re-run day). The mode is a per-write option, so
+    * the session conf is never touched and concurrent writers (other
+    * tables, streaming queries) cannot see or race it. */
+  def overwritePartitions(df: DataFrame, tableDir: String): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
       .partitionBy("date")
       .parquet(tableDir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   /** Clustered write: range-partition on `clusterCols` and sort
     * within each output file so every file covers a DISJOINT key
@@ -194,11 +188,20 @@ object Medallion {
     * `storage_manager.py:148-175`). */
   def writeRunMetadata(spark: SparkSession, metaDir: String,
                        pipeline: String, records: Long,
-                       validRecords: Long, durationSec: Double): Unit = {
-    import spark.implicits._
-    Seq((pipeline, records, validRecords, durationSec))
-      .toDF("pipeline", "records", "valid_records", "duration_sec")
-      .withColumn("run_at", current_timestamp())
-      .write.mode("append").parquet(metaDir)
-  }
+                       validRecords: Long, durationSec: Double): Unit =
+    writeRunMetadata(spark, metaDir,
+      Seq((pipeline, records, validRecords, durationSec)))
+
+  /** Several `(pipeline, records, validRecords, durationSec)` records in
+    * ONE append (none for an empty `rows`). A metadata dir takes one
+    * writer at a time: concurrent appends share its `_temporary`
+    * staging dir, so jobs collect their rows and append once. */
+  def writeRunMetadata(spark: SparkSession, metaDir: String,
+                       rows: Seq[(String, Long, Long, Double)]): Unit =
+    if (rows.nonEmpty) {
+      import spark.implicits._
+      rows.toDF("pipeline", "records", "valid_records", "duration_sec")
+        .withColumn("run_at", current_timestamp())
+        .write.mode("append").parquet(metaDir)
+    }
 }

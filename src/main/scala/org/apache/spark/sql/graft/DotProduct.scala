@@ -217,12 +217,15 @@ object SqDistLong {
 
 /** Exact int64 dot product Σ aᵢ·bᵢ of two long arrays — the integer
   * sibling of [[DotProduct]] with [[SqDistLong]]'s contract: compiled
-  * primitive loop, null arrays propagate, null elements are 0, RAGGED
-  * arrays return NULL (exactly the HOF fold's value — zip_with pads
-  * with nulls and the sum nulls out; round-11 ADVICE). Serves the
-  * milli/micro-grid similarity queries (q325/q336 facility-location
-  * and Otsu frames) whose `aggregate(zip_with(a,b,*),0,+)` ran
-  * interpreted per element. */
+  * primitive loop, null arrays propagate, RAGGED arrays return NULL
+  * (exactly the HOF fold's value — zip_with pads with nulls and the
+  * sum nulls out; round-11 ADVICE). A null ELEMENT in equal-length
+  * arrays is the one divergence: it counts as 0 here, while the fold's
+  * null product nulls the whole sum. So the fold's value is matched
+  * only on null-free arrays — the q325/q336 grids carry no null
+  * elements. Serves the milli/micro-grid similarity queries
+  * (q325/q336 facility-location and Otsu frames) whose
+  * `aggregate(zip_with(a,b,*),0,+)` ran interpreted per element. */
 case class DotLong(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 

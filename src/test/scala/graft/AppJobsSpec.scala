@@ -46,7 +46,8 @@ class AppJobsSpec extends SparkSpec {
     assert(silverResults.forall(_.success), silverResults.mkString("; "))
     val click = silverResults.find(_.topic == "clickstream").get
     // e4 (null user) dropped after parse; the corrupt line is dropped by
-    // wellFormed: 3 of 5 raw → quality 0.6, still written.
+    // wellFormed: 3 of 5 raw → quality 0.6, still written. The raw 5
+    // is observed on the bronze scan, so it counts the malformed line.
     assert(click.recordsRead == 5)
     assert(click.recordsProcessed == 3)
     assert(math.abs(click.qualityScore - 0.6) < 1e-9)
@@ -69,11 +70,67 @@ class AppJobsSpec extends SparkSpec {
     assert(enriched.filter(col("user_id") === "2")
       .select("customer_segment").head().getString(0) != null)
 
-    // run-metadata checkpoint: 3 silver rows + 1 gold row
+    // run-metadata checkpoint: one row per silver topic + 1 gold row
     val meta = Medallion.readTable(spark, s"$root/meta")
     assert(meta.count() == 4)
+    assert(meta.filter(col("pipeline").startsWith("silver:"))
+      .select("pipeline").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("silver:clickstream", "silver:product", "silver:user"))
     assert(meta.filter(col("pipeline") === "silver:clickstream")
       .select("valid_records").head().getLong(0) == 3)
+  }
+
+  test("SilverJob with one topic's bronze missing: the others still land") {
+    val root = seed()
+    val product = new java.io.File(s"$root/bronze/topics/product-events")
+    product.listFiles().foreach(_.delete())
+    assert(product.delete())
+    val results = SilverJob.run(spark, s"$root/bronze", s"$root/silver",
+      s"$root/meta")
+    // topic order, whatever order the concurrent topics finished in
+    assert(results.map(_.topic) == SilverJob.topics.map(_.name))
+    assert(results.map(_.success) == Seq(true, true, false))
+    val p = results.last
+    assert(p.recordsRead == 0 && p.error.exists(_.contains("No bronze")))
+    assert(results.head.recordsRead == 5)
+    assert(!new java.io.File(s"$root/silver/product_events_silver").exists())
+    // exactly one run-metadata row per SUCCESSFUL topic
+    val pipelines = Medallion.readTable(spark, s"$root/meta")
+      .select("pipeline").collect().map(_.getString(0)).sorted.toSeq
+    assert(pipelines == Seq("silver:clickstream", "silver:user"))
+  }
+
+  test("SilverJob: a topic with no valid records writes nothing") {
+    val root = seed()
+    // clickstream: malformed lines only; user: the dir holds no files
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      s"$root/bronze/topics/clickstream-events/part-0.json"),
+      "{not json\n{also not json")
+    new java.io.File(s"$root/bronze/topics/user-events/part-0.json").delete()
+    val results = SilverJob.run(spark, s"$root/bronze", s"$root/silver",
+      s"$root/meta")
+    val Seq(click, user, product) = results
+    assert(!click.success && click.recordsRead == 2 &&
+      click.recordsProcessed == 0, click)
+    assert(click.error.exists(_.contains("No valid records")))
+    assert(!user.success && user.recordsRead == 0, user)
+    assert(product.success)
+    assert(!new java.io.File(s"$root/silver/clickstream_silver").exists())
+    assert(!new java.io.File(s"$root/silver/user_events_silver").exists())
+    assert(Medallion.readTable(spark, s"$root/meta").select("pipeline")
+      .collect().map(_.getString(0)).toSeq == Seq("silver:product"))
+  }
+
+  test("a failed gate reports the same table keys as a passing one") {
+    val root = seed()
+    SilverJob.run(spark, s"$root/bronze", s"$root/silver", s"$root/meta")
+    // no validity rate reaches 1.01: the gate fails with both dims present
+    val results = GoldJob.run(spark, s"$root/silver", s"$root/gold",
+      s"$root/meta", gateThreshold = 1.01)
+    assert(results.keySet == Set("user_summary", "product_summary",
+      "daily_stats", "engagement_metrics", "enriched_events"))
+    assert(results.values.forall(v => !v))
+    assert(!new java.io.File(s"$root/gold").exists())
   }
 
   test("GoldJob aborts when the quality gate fails") {

@@ -170,6 +170,14 @@ class FunctionsSpec extends SparkSpec {
         Vectors.dotLFold(col("a"), col("b")).as("spec"))
       .head()
     assert(rg.isNullAt(0) && rg.isNullAt(1))
+    // a null ELEMENT is the documented divergence: DotLong counts it
+    // as 0 (1·4 + 0 + 3·6 = 22), the fold's null product nulls the sum
+    val ne = Seq((Seq(Option(1L), None, Option(3L)), Seq(4L, 5L, 6L)))
+      .toDF("a", "b")
+      .select(Vectors.dotL(col("a"), col("b")).as("fast"),
+        Vectors.dotLFold(col("a"), col("b")).as("spec"))
+      .head()
+    assert(ne.getLong(0) == 22L && ne.isNullAt(1))
   }
 
   test("Vectors.hyperplane is deterministic and lshBucket in range") {

@@ -104,4 +104,13 @@ class LangModelSpec extends SparkSpec {
     def mn(k: Long): Long = math.floor(math.log(k.toDouble) * 1000).toLong
     assert(llr.toSeq == Seq(2 * mn(4)))
   }
+
+  test("DSIR totals (q205): an empty bucket census totals 0, not NULL") {
+    val empty = Seq.empty[(Long, Long, Long)].toDF("b", "cr", "ct")
+    val row = graft.queries.PipelineQueries.dsirTotals(empty).head()
+    assert(row.getLong(0) == 0L && row.getLong(1) == 0L)
+    val two = Seq((0L, 3L, 1L), (5L, 4L, 4L)).toDF("b", "cr", "ct")
+    val r2 = graft.queries.PipelineQueries.dsirTotals(two).head()
+    assert(r2.getLong(0) == 7L && r2.getLong(1) == 5L)
+  }
 }

@@ -199,6 +199,7 @@ class MedallionSpec extends SparkSpec {
 
   test("overwritePartitions replaces only the re-run day (idempotent upsert)") {
     import spark.implicits._
+    val conf0 = spark.conf.getOption(overwriteKey)
     val out = Files.createTempDirectory("graft_upsert").toString
     Medallion.writePartitioned(
       Seq(("old5", "2025-09-05"), ("old6", "2025-09-06"))
@@ -211,9 +212,42 @@ class MedallionSpec extends SparkSpec {
     val got = Medallion.readTable(spark, out)
       .collect().map(r => r.getString(0) -> r.get(1).toString).sorted.toSeq
     assert(got == Seq("new6" -> "2025-09-06", "old5" -> "2025-09-05"))
-    // conf restored (dynamic mode must not leak into the session)
-    assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      .contains("dynamic"))
+    // dynamic mode is a per-write option: the session value is untouched
+    assert(spark.conf.getOption(overwriteKey) == conf0)
+  }
+
+  private val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
+
+  test("concurrent overwritePartitions on two tables keep their other days") {
+    import spark.implicits._
+    val dirs = Seq("a", "b").map(t =>
+      Files.createTempDirectory(s"graft_upsert_$t").toString)
+    dirs.foreach(d => Medallion.writePartitioned(
+      Seq(("old5", "2025-09-05"), ("old6", "2025-09-06")).toDF("v", "date"), d))
+    // sample the session value for the whole time the writes run: it
+    // must never change, not merely be restored afterwards
+    val conf0 = spark.conf.getOption(overwriteKey)
+    @volatile var writing = true
+    @volatile var confChanged = false
+    val sampler = new Thread(() =>
+      while (writing) {
+        if (spark.conf.getOption(overwriteKey) != conf0) confChanged = true
+        Thread.sleep(1)
+      })
+    sampler.start()
+    try graft.functions.Concurrent.inParallel(spark, dirs.map { d => () =>
+      for (_ <- 1 to 3)
+        Medallion.overwritePartitions(
+          Seq(("new6", "2025-09-06")).toDF("v", "date"), d)
+    })
+    finally { writing = false; sampler.join() }
+    dirs.foreach { d =>
+      val got = Medallion.readTable(spark, d).collect()
+        .map(r => r.getString(0) -> r.get(1).toString).sorted.toSeq
+      assert(got == Seq("new6" -> "2025-09-06", "old5" -> "2025-09-05"), d)
+    }
+    assert(!confChanged)
+    assert(spark.conf.getOption(overwriteKey) == conf0)
   }
 
   test("clusteredWrite yields disjoint per-file key ranges") {
